@@ -22,9 +22,12 @@ Determinism contract (so the oracle value-hash matches bit-for-bit):
 
 Optimization notes (rounds 15-16; see OPTIMIZATION_r15.md /
 OPTIMIZATION_r16.md):
-  * the price-band cutoffs use an exact binned rank search (two
-    light, fully parallel aggregation jobs) instead of a
-    single-partition global sort (guide §2.4/§2.5);
+  * the price-band cutoffs and the per-group count+median share one
+    exact grouped binned rank search (_exact_ranks): per level, one
+    (group, log-bin) count aggregation and one pull filtered at the
+    scan to the target bins; dense cells are refined together, one
+    aggregation per level.  No single-partition global sort and no
+    full-data per-group sort window (guide §2.4/§2.5);
   * string/vector kernels (dedup signature digests, kNN cosines,
     norms) run vectorized in numpy via mapInArrow (guide §4.2) —
     Catalyst evaluates higher-order functions and array expressions
@@ -34,9 +37,6 @@ OPTIMIZATION_r16.md):
     |lineitem| at every sf), so queries whose output needs no
     dimension column skip the join entirely, and the others join one
     pre-joined pruned dimension mapping (guide §1.2/§2.3/§8);
-  * per-group count+median use the grouped binned rank search
-    (_grouped_median): metadata aggregation + scan-prefiltered pull,
-    never a full-data per-group sort window (guide §2.4/§2.5);
   * table handles are memoized per query invocation with explicit
     schemas — per-read datasource re-resolution measured ~110 ms of
     single-threaded driver time (guide §7.3).
@@ -129,19 +129,17 @@ QSCALE = 1_000_000  # 1e-6 quantum for floating sums/averages
 # shuffled join of the fact-sized sides
 _DIM_BROADCAST_CAP = 64 << 20
 
-# broadcast the grouped-median pull-pass fact side only while its
-# EXACT row count (known from the metadata pass) stays small
+# broadcast the rank-search pull's fact side only while its EXACT row
+# count (known from the bin counts) stays small
 _CAND_BROADCAST_ROWS = 2_000_000
-
-# a grouped-median (group, bin) cell above this sorts too much in one
-# task; such cells are resolved by the recursive rank search instead
-_GM_DENSE_CELL_ROWS = 4_000_000
 
 
 def _qsum(col: Column | str, scale: int = QSCALE) -> Column:
     """Order-independent exact sum: floor-quantize each double to an
     integer, sum as BIGINT.  Valid while sum(|x|)*scale < 2^63 (ample
-    at the bench scale factors; production would widen to DECIMAL)."""
+    at the bench scale factors); past it the sum raises
+    ARITHMETIC_OVERFLOW under ANSI mode (the bench session's setting)
+    and wraps without it."""
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(F.floor(c * F.lit(float(scale))))
 
@@ -221,115 +219,124 @@ _GM_BIN_SCALE_SMALL = 64.0
 _GM_FINE_BIN_BYTES = 1 << 30
 
 
-def _gm_bin_scale(sf_dir: str) -> float:
-    return (_BIN_SCALE if _table_bytes(sf_dir, "lineitem") >= _GM_FINE_BIN_BYTES
-            else _GM_BIN_SCALE_SMALL)
+def _exact_ranks(df: DataFrame, keys: list[str], col: str, ranks,
+                 attach=lambda df, small_fact=False: df,
+                 scale: float = _BIN_SCALE, depth: int = 0
+                 ) -> dict[tuple, tuple[int, dict[int, float]]]:
+    """Values at 1-based ranks of ``col`` (> 0) in each group of ``keys``,
+    as ``{group: (n, {rank: value})}``, where ``ranks(group, n)`` names
+    the ranks a group of n rows wants.  ``attach(df, small_fact)`` adds
+    the key columns (a dimension join); ``small_fact`` says its input
+    is small enough to broadcast.
 
-
-def _exact_ranks(df: DataFrame, col: str, ks: list[int], n: int | None = None,
-                 depth: int = 0) -> dict[int, float]:
-    """Values at the given ascending 1-based global ranks of df[col]
-    (col must be > 0).
-
-    Exact discrete quantiles WITHOUT a global sort (guide §2.4/§2.5):
-    one log-bin counting pass narrows each rank to one bin (a few
-    thousand rows of metadata to the driver), one filter pass pulls
-    only the target bins' values.  Pathologically dense bins recurse
-    with a finer bin scale.  ``n`` (total rows) is validated against
-    the bin counts when given; callers that need n first should use
-    ``_exact_quantiles``.
+    Exact without sorting the data (guide §2.4/§2.5).  Per level, one
+    ``groupBy(keys, log_bin).count()`` is collected and the driver finds
+    each rank's bin and its rank in that bin; one pull, filtered at the
+    scan to the target bins and joined to the broadcast target (group,
+    bin) cells, is collected and sorted.  Cells past the pull's
+    ``_COLLECT_LIMIT`` rows are refined together by ONE call at depth
+    + 1 keyed on the parent bin too, so a level costs one aggregation
+    however many cells are dense; past ``_MAX_DEPTH`` a spilling window
+    sort per cell ranks them.  Equal values share a bin, so ties never
+    straddle one and each value equals the row_number formulation's.
     """
-    bin_expr = _log_bin(col, depth)
-    counts = dict(df.groupBy(bin_expr.alias("b")).count().collect())
-    if None in counts:
-        raise ValueError("_exact_ranks requires a positive column")
-    total = sum(counts.values())
-    if n is not None and n != total:
-        raise RuntimeError(f"row count drifted: {n} != {total}")
-    for k in ks:
-        if not 1 <= k <= total:
-            raise ValueError(f"rank {k} out of range 1..{total}")
-    return _rank_values(df, col, bin_expr, counts, sorted(set(ks)), depth)
+    b = _log_bin(col, depth, scale)
+    counts: dict[tuple, dict[int, int]] = {}
+    for r in attach(df).groupBy(*keys, b.alias("__bin")).count().collect():
+        if r[-2] is None:
+            raise ValueError("_exact_ranks requires a positive column")
+        counts.setdefault(tuple(r[:-2]), {})[r[-2]] = r[-1]
 
+    out: dict[tuple, tuple[int, dict[int, float]]] = {}
+    # (group..., bin) -> [(rank, rank inside the bin)]
+    targets: dict[tuple, list[tuple[int, int]]] = {}
+    for cell, by_bin in counts.items():
+        n = sum(by_bin.values())
+        ks = sorted(set(ranks(cell, n)))
+        if ks and not 1 <= ks[0] <= ks[-1] <= n:
+            raise ValueError(f"ranks {ks} out of range 1..{n}")
+        out[cell] = (n, {})
+        cum, i = 0, 0
+        for bn in sorted(by_bin):
+            while i < len(ks) and ks[i] <= cum + by_bin[bn]:
+                targets.setdefault(cell + (bn,), []).append((ks[i], ks[i] - cum))
+                i += 1
+            cum += by_bin[bn]
 
-def _rank_values(df: DataFrame, col: str, bin_expr: Column,
-                 counts: dict[int, int], ks_sorted: list[int],
-                 depth: int) -> dict[int, float]:
-    """Resolve sorted ranks against precomputed bin counts."""
-    targets: dict[int, list[tuple[int, int]]] = {}
-    cum = 0
-    i = 0
-    for b in sorted(counts):
-        c = counts[b]
-        while i < len(ks_sorted) and ks_sorted[i] <= cum + c:
-            targets.setdefault(b, []).append((ks_sorted[i], ks_sorted[i] - cum))
-            i += 1
-        cum += c
-    assert i == len(ks_sorted), "rank bookkeeping failed"
+    size = {t: counts[t[:-1]][t[-1]] for t in targets}
+    pull, dense, budget = [], [], _COLLECT_LIMIT
+    for t in sorted(targets, key=size.get):
+        if size[t] <= budget:
+            pull.append(t)
+            budget -= size[t]
+        else:
+            dense.append(t)
 
-    out: dict[int, float] = {}
-    small = [b for b in targets if counts[b] <= _COLLECT_LIMIT]
-    if small:
-        # one job pulls every resolvable bin's values
-        rows = (df.where(bin_expr.isin(small))
-                  .select(bin_expr.alias("b"), F.col(col).alias("v")).collect())
-        by_bin: dict[int, list[float]] = {}
-        for r in rows:
-            by_bin.setdefault(r["b"], []).append(r["v"])
-        for b in small:
-            vals = sorted(by_bin[b])
-            if len(vals) != counts[b]:
+    def rows_of(cells: list[tuple]) -> DataFrame:
+        """(keys..., __bin, __v) rows of the given (group..., bin) cells."""
+        bins = {t[-1] for t in cells}
+        # exact row count through attach: every group's rows in those bins
+        n_cand = sum(c for by_bin in counts.values()
+                     for bn, c in by_bin.items() if bn in bins)
+        sub = attach(df.where(b.isin(sorted(bins))),
+                     small_fact=n_cand <= _CAND_BROADCAST_ROWS) \
+            .select(*keys, b.alias("__bin"), F.col(col).alias("__v"))
+        if not keys:  # the bin filter alone selects the cells
+            return sub
+        tgt = F.broadcast(df.sparkSession.createDataFrame(
+            cells, sub.drop("__v").schema))
+        return sub.join(tgt, [sub[k].eqNullSafe(tgt[k]) for k in keys + ["__bin"]]) \
+                  .select(*[sub[c] for c in sub.columns])
+
+    if pull:
+        vals: dict[tuple, list[float]] = {}
+        for r in rows_of(pull).collect():
+            vals.setdefault(tuple(r[:-1]), []).append(r[-1])
+        for t in pull:
+            got = sorted(vals.get(t, []))
+            if len(got) != size[t]:
                 raise RuntimeError("bin re-evaluation mismatch")
-            for k, r in targets[b]:
-                out[k] = vals[r - 1]
-    for b in targets:
-        if b in small:
-            continue
-        sub = df.where(bin_expr == b)
-        if depth >= _MAX_DEPTH:
-            # a bin still oversized after maximal refinement holds
-            # near-identical values; resolve its ranks on the CLUSTER
-            # with an external (spilling) single-partition sort +
-            # row_number — memory-safe at any bin size and any rank,
-            # unlike offset+limit (a size-(offset+limit) priority
-            # queue) or collecting the bin whole
-            rs_bin = [r for _, r in targets[b]]
-            rows = (sub.select(F.col(col).alias("v"))
-                       .withColumn("rn", F.row_number().over(Window.orderBy("v")))
-                       .where(F.col("rn").isin(rs_bin))
-                       .collect())
-            got_bin = {r["rn"]: r["v"] for r in rows}
-            for k, r in targets[b]:
-                out[k] = got_bin[r]
-            continue
-        rs = [r for _, r in targets[b]]
-        got = _exact_ranks(sub, col, rs, counts[b], depth + 1)
-        for k, r in targets[b]:
-            out[k] = got[r]
+            for k, rk in targets[t]:
+                out[t[:-1]][1][k] = got[rk - 1]
+    if dense and depth >= _MAX_DEPTH:
+        # an external (spilling) sort + row_number per cell: memory-safe
+        # at any cell size and any rank, unlike offset+limit (a
+        # size-(offset+limit) priority queue) or collecting the cell
+        w = Window.partitionBy(*keys, "__bin").orderBy("__v")
+        rks = sorted({rk for t in dense for _, rk in targets[t]})
+        got = {tuple(r[:-1]): r[-1] for r in
+               rows_of(dense).withColumn("__rn", F.row_number().over(w))
+                             .where(F.col("__rn").isin(rks))
+                             .select(*keys, "__bin", "__rn", "__v").collect()}
+        for t in dense:
+            for k, rk in targets[t]:
+                out[t[:-1]][1][k] = got[t + (rk,)]
+    elif dense:
+        nb = f"__b{depth}"
+        want = {t: [rk for _, rk in targets[t]] for t in dense}
+        sub = _exact_ranks(
+            df.where(b.isin(sorted({t[-1] for t in dense}))).withColumn(nb, b),
+            keys + [nb], col, lambda cell, n: want.get(cell, []),
+            attach, scale, depth + 1)
+        for t in dense:
+            n_sub, got = sub.get(t, (0, {}))
+            if n_sub != size[t]:
+                raise RuntimeError(f"row count drifted: {n_sub} != {size[t]}")
+            for k, rk in targets[t]:
+                out[t[:-1]][1][k] = got[rk]
     return out
 
 
-def _exact_quantiles(df: DataFrame, col: str, qs: list[tuple[int, int]]) -> list[float]:
-    """Values at the discrete quantiles ceil(num*n/den): the bin-count
-    pass already yields n, so no separate count job is needed."""
-    bin_expr = _log_bin(col, 0)
-    counts = dict(df.groupBy(bin_expr.alias("b")).count().collect())
-    if None in counts:
-        raise ValueError("_exact_quantiles requires a positive column")
-    n = sum(counts.values())
-    ks = [(num * n + den - 1) // den for num, den in qs]  # ceil in integers
-    got = _rank_values(df, col, bin_expr, counts, sorted(set(ks)), depth=0)
-    return [got[k] for k in ks]
-
-
-def _price_cutoffs(ctx: _Ctx) -> tuple[float, float]:
-    """Discrete 5th/95th percentile of price: value at rank ceil(q*n).
-
-    Runs on the bare 2-column lineitem projection; the numeric work is
-    too cheap to justify a spreading shuffle per pass."""
+def _price_cutoffs(ctx: _Ctx) -> tuple[float | None, float | None]:
+    """Discrete 5th/95th percentile of price (ranks ceil(n/20) and
+    ceil(19n/20)) over the bare 2-column lineitem projection.  With no
+    rows no rank is requested: both cutoffs are NULL, so the band is
+    empty, as in the oracle."""
     li = ctx.load("lineitem").select(_price().alias("price"))
-    lo, hi = _exact_quantiles(li, "price", [(1, 20), (19, 20)])
-    return lo, hi
+    got = _exact_ranks(li, [], "price",
+                       lambda _, n: [(n + 19) // 20, (19 * n + 19) // 20])
+    n, vals = got.get((), (0, {}))  # no group at all when lineitem is empty
+    return vals.get((n + 19) // 20), vals.get((19 * n + 19) // 20)
 
 
 def _cleaned_lineitem(ctx: _Ctx) -> DataFrame:
@@ -338,8 +345,7 @@ def _cleaned_lineitem(ctx: _Ctx) -> DataFrame:
 
     Measured A/B: spreading this scan is a LOSS — the per-row numeric
     work (~0.5 s single-core at sf0.1) is cheaper than the repartition
-    shuffle it would take to parallelize it, unlike the string/vector
-    operators where _spread_small wins."""
+    shuffle it would take to parallelize it."""
     lo, hi = _price_cutoffs(ctx)
     li = ctx.load("lineitem")
     pr = _price()
@@ -381,9 +387,9 @@ def _dims(ctx: _Ctx, cleaned: DataFrame,
     # hint on the real input bytes (scale-adaptive: at real scale
     # orders/customer exceed the cap and the planner chooses a
     # shuffled join of the two fact-sized sides).  When the caller
-    # KNOWS the fact side is tiny (e.g. the grouped-median pull pass,
-    # whose exact row count comes from the metadata pass), broadcast
-    # that side instead and skip the dim hash-table build.
+    # KNOWS the fact side is tiny (e.g. the rank-search pull, whose
+    # exact row count comes from the bin counts), broadcast that side
+    # instead and skip the dim hash-table build.
     dim_bytes = _table_bytes(ctx.sf_dir, "orders")
     if need & {"district", "city", "region"}:
         dim_bytes += _table_bytes(ctx.sf_dir, "customer")
@@ -412,122 +418,27 @@ def cleaned_listings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _grouped_median(ctx: _Ctx, binned: DataFrame, keys: list[str],
+def _grouped_median(ctx: _Ctx, df: DataFrame, keys: list[str],
                     attach) -> DataFrame:
-    """Per-group (count, discrete median of price_per_unit) via a
-    grouped binned rank search (guide §2.4/§2.5).
-
-    The round-15 shape shuffled the ENTIRE fact table into one
-    partition per group (25 cities / ~125 districts) and sorted each
-    group in full — a hard parallelism ceiling at any scale (the 8->32
-    core ratio measured ~1.0).  Instead, the grouped analogue of
-    ``_exact_ranks``:
-
-    1. metadata pass: ``groupBy(keys, log_bin(ppu))`` counts — partial
-       (map-side) aggregation shuffles only (group x bin) metadata;
-       tiny windows over that metadata find, per group, the bin
-       containing the median rank ``(total+1) DIV 2`` and the rank
-       offset within it; ONE row per group is collected (bounded by
-       the query's own output size, like the cutoff scalars);
-    2. pull pass: ``binned`` is re-read filtered to the union of
-       target bins AT THE SCAN (before any dimension join — only
-       ~|groups| bins x ~bin-density rows survive, so the join and the
-       per-group sort run on a few thousand rows), then joined to the
-       local one-row-per-group target table.
-
-    ``binned`` must carry ``price_per_unit`` and its log bin ``b``;
-    ``attach(df)`` adds the group-key columns (dimension joins) and is
-    called once per pass.  Ties cannot straddle a bin (equal values
-    share a bin), so the selected VALUE equals the row_number
-    formulation's.  price_per_unit > 0 by construction (price >= lo >
-    0, l_quantity > 0), so the log bin is never null.  A (group, bin)
-    cell above _GM_DENSE_CELL_ROWS (which would otherwise sort in one
-    task — the grouped analogue of the skew a single enormous key
-    causes, guide §2.5) is excluded from the pull join and resolved by
-    the fully parallel recursive rank search on that cell alone.
+    """Per-group (n_listings, median_ppu: price_per_unit at rank
+    (n + 1) DIV 2) from ``_exact_ranks``, as a small local DataFrame.
+    price_per_unit > 0 by construction (price >= lo > 0, l_quantity > 0).
     """
-    full = attach(binned).select(*keys, "price_per_unit", "b")
-    meta = full.groupBy(*keys, "b").agg(F.count(F.lit(1)).alias("c"))
-    w_cum = (Window.partitionBy(*keys).orderBy("b")
-             .rowsBetween(Window.unboundedPreceding, 0))
-    rank = F.expr("(total + 1) DIV 2")
-    all_rows = (meta.withColumn("cum", F.sum("c").over(w_cum))
-                    .withColumn("total", F.sum("c").over(Window.partitionBy(*keys)))
-                    .withColumn("bin_total",
-                                F.sum("c").over(Window.partitionBy("b")))
-                    .where((F.col("cum") - F.col("c") < rank) & (rank <= F.col("cum")))
-                    .select(*keys, F.col("b").alias("tb"),
-                            (rank - F.col("cum") + F.col("c")).alias("rk"),
-                            F.col("total").alias("n_listings"), "c", "bin_total")
-                    .collect())
-    tgt_rows = [r for r in all_rows if r["c"] <= _GM_DENSE_CELL_ROWS]
-    dense_rows = [r for r in all_rows if r["c"] > _GM_DENSE_CELL_ROWS]
-    bins = sorted({r["tb"] for r in tgt_rows})
-    # exact pull-pass row count, known from the metadata: the scan
-    # filter keeps every row whose bin is in the UNION of target bins
-    # (across ALL groups), so sum each distinct bin's GLOBAL count —
-    # when small, the pull join broadcasts the filtered fact side
-    # instead of rebuilding the dimension hash table for a few probes
-    n_cand = sum({r["tb"]: r["bin_total"] for r in tgt_rows}.values())
-    key_fields = [full.schema[k] for k in keys]
-    from pyspark.sql import types as T
-    tgt_schema = T.StructType(
-        [T.StructField(f"__{f.name}", f.dataType) for f in key_fields]
-        + [T.StructField("tb", T.LongType()),
-           T.StructField("rk", T.LongType()),
-           T.StructField("n_listings", T.LongType())])
-    tgt = ctx.spark.createDataFrame(
-        [tuple(r)[: len(keys) + 3] for r in tgt_rows], tgt_schema)
-
-    cand = attach(binned.where(F.col("b").isin(bins)),
-                  small_fact=n_cand <= _CAND_BROADCAST_ROWS) \
-        .select(*keys, "price_per_unit", "b")
-    cond = [cand[k] == tgt[f"__{k}"] for k in keys]
-    cond.append(cand["b"] == tgt["tb"])
-    w_rank = Window.partitionBy(*keys).orderBy("price_per_unit")
-    out = (cand.join(F.broadcast(tgt), cond)
-               .withColumn("rn", F.row_number().over(w_rank))
-               .where(F.col("rn") == F.col("rk"))
-               .select(*keys, "n_listings",
-                       F.col("price_per_unit").alias("median_ppu")))
-    if dense_rows:
-        # pathological cells: resolve each group's in-cell rank with
-        # the recursive binned rank search (parallel aggregation
-        # passes over just that cell — no single-task sort, bounded
-        # driver memory), then append the locally built rows
-        local = []
-        for r in dense_rows:
-            cell = attach(binned.where(F.col("b") == r["tb"]))
-            for k in keys:
-                cell = cell.where(F.col(k) == r[k])
-            got = _exact_ranks(cell.select("price_per_unit"),
-                               "price_per_unit", [r["rk"]], r["c"], depth=1)
-            local.append(tuple(r[k] for k in keys)
-                         + (r["n_listings"], got[r["rk"]]))
-        dense_schema = T.StructType(
-            [T.StructField(k, full.schema[k].dataType) for k in keys]
-            + [T.StructField("n_listings", T.LongType()),
-               T.StructField("median_ppu", T.DoubleType())])
-        out = out.unionByName(ctx.spark.createDataFrame(local, dense_schema))
-    return out
-
-
-def _binned_cleaned(ctx: _Ctx) -> DataFrame:
-    """Cleaned lineitem with the price_per_unit log bin attached (the
-    cutoffs are resolved once here and shared by both median passes).
-    Bin granularity is input-size-adaptive (see _gm_bin_scale)."""
-    return (_cleaned_lineitem(ctx)
-            .withColumn("b", _log_bin("price_per_unit", 0,
-                                      _gm_bin_scale(ctx.sf_dir))))
+    fine = _table_bytes(ctx.sf_dir, "lineitem") >= _GM_FINE_BIN_BYTES
+    got = _exact_ranks(df, keys, "price_per_unit", lambda _, n: [(n + 1) // 2],
+                       attach, _BIN_SCALE if fine else _GM_BIN_SCALE_SMALL)
+    schema = (attach(df).select(*keys).schema
+              .add("n_listings", "long").add("median_ppu", "double"))
+    return ctx.spark.createDataFrame(
+        [cell + (n, v[(n + 1) // 2]) for cell, (n, v) in got.items()], schema)
 
 
 def city_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference test.py: top-20 cities by listing count with the
     median price-per-unit (ties broken by city name)."""
     ctx = _Ctx(spark, sf_dir)
-    binned = _binned_cleaned(ctx)
     med = _grouped_median(
-        ctx, binned, ["city"],
+        ctx, _cleaned_lineitem(ctx), ["city"],
         lambda df, small_fact=False: _dims(ctx, df, {"city"}, small_fact))
     return (med.orderBy(F.desc("n_listings"), "city").limit(20)
                .select("city", "n_listings", "median_ppu"))
@@ -540,9 +451,8 @@ def district_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (city count = sum of its district counts — exact integers).
     """
     ctx = _Ctx(spark, sf_dir)
-    binned = _binned_cleaned(ctx)
     med = _grouped_median(
-        ctx, binned, ["city", "district"],
+        ctx, _cleaned_lineitem(ctx), ["city", "district"],
         lambda df, small_fact=False: _dims(ctx, df, {"city", "district"},
                                            small_fact))
     w_city = Window.partitionBy("city")
@@ -714,26 +624,14 @@ def event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour window per event type: volume, users, value.
-
-    Exact distinct users via TWO-LEVEL aggregation (guide §2.4):
-    pre-aggregate per (hour, event_type, user_id) — partial map-side
-    aggregation shuffles one row per distinct triple — then count the
-    pre-aggregated rows per (hour, event_type).  This replaces the
-    Expand-based count(DISTINCT) plan, which doubled every input row
-    before the exchange.  The integer partial sums re-sum exactly.
-    """
-    ev = load(spark, sf_dir, "events").select(
-        F.date_trunc("hour", "ts").alias("hour"), "event_type", "user_id",
-        F.floor(F.col("value") * F.lit(1000000.0)).alias("qv"))
-    pre = (ev.groupBy("hour", "event_type", "user_id")
-             .agg(F.count(F.lit(1)).alias("c"), F.sum("qv").alias("s")))
-    # count("user_id") over the pre-aggregated rows skips a NULL user
-    # group, matching count(DISTINCT user_id) semantics exactly
-    return (pre.groupBy("hour", "event_type")
-               .agg(F.sum("c").alias("n_events"),
-                    F.count("user_id").alias("n_users"),
-                    (F.sum("s").cast("double")
-                     / F.lit(1000000.0)).alias("total_value")))
+    A single count(DISTINCT) is planned as a two-level aggregation
+    with no Expand (pinned by tests/test_internals.py)."""
+    ev = load(spark, sf_dir, "events")
+    return (ev.groupBy(F.date_trunc("hour", "ts").alias("hour"), "event_type")
+              .agg(F.count(F.lit(1)).alias("n_events"),
+                   F.countDistinct("user_id").alias("n_users"),
+                   (_qsum("value").cast("double")
+                    / F.lit(1000000.0)).alias("total_value")))
 
 
 # --- LLM-data-pipeline operators ---------------------------------------------

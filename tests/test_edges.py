@@ -1,0 +1,64 @@
+"""Oracle parity on edge inputs: sf0.001 copies with one table replaced,
+written with pyarrow under the test's tmp_path."""
+
+from __future__ import annotations
+
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from rental_engine.queries import TABLES
+from tests.conftest import SF_SMALL
+from tests.test_oracle import canon_rows, run_both
+
+# every query that reads lineitem (all of them through the price band)
+LINEITEM_QUERIES = [
+    "cleaned_listings", "city_stats", "district_stats", "avg_price_by_rooms",
+    "count_by_rooms", "advertiser_share", "region_avg_price", "region_avg_ppu",
+    "price_area_regression", "price_histogram",
+]
+
+
+def edge_dir(path, name: str, table: pa.Table) -> str:
+    """sf0.001 with table ``name`` replaced by ``table``."""
+    for t in TABLES:
+        if t != name:
+            os.symlink(f"{SF_SMALL}/{t}.parquet", os.path.join(path, f"{t}.parquet"))
+    pq.write_table(table, os.path.join(path, f"{name}.parquet"))
+    return str(path)
+
+
+def assert_parity(spark, name: str, sf_dir: str):
+    scols, srows, dcols, drows = run_both(spark, name, sf_dir)
+    assert scols == dcols, f"{name}: column mismatch {scols} vs {dcols}"
+    assert canon_rows(srows) == canon_rows(drows), f"{name}: {srows[:3]} vs {drows[:3]}"
+    return srows
+
+
+@pytest.fixture(scope="module")
+def empty_lineitem(tmp_path_factory):
+    schema = pq.read_schema(f"{SF_SMALL}/lineitem.parquet")
+    return edge_dir(tmp_path_factory.mktemp("empty_lineitem"), "lineitem",
+                    schema.empty_table())
+
+
+@pytest.mark.parametrize("name", LINEITEM_QUERIES)
+def test_empty_lineitem_matches_oracle(spark, empty_lineitem, name):
+    """No rows means no ranks to find: the cutoffs are NULL and the
+    band is empty, as in the oracle."""
+    rows = assert_parity(spark, name, empty_lineitem)
+    assert rows == ([(0, None, None)] if name == "price_area_regression" else [])
+
+
+def test_events_hourly_null_user_matches_oracle(spark, tmp_path):
+    """count(DISTINCT user_id) must skip NULL users as the oracle does
+    (the testdata has none, so a third of them are blanked here)."""
+    ev = pq.read_table(f"{SF_SMALL}/events.parquet")
+    users = [None if i % 3 == 0 else u
+             for i, u in enumerate(ev.column("user_id").to_pylist())]
+    i = ev.schema.get_field_index("user_id")
+    ev = ev.set_column(i, ev.schema.field(i), pa.array(users, pa.int64()))
+    rows = assert_parity(spark, "events_hourly", edge_dir(tmp_path, "events", ev))
+    assert rows and sum(r[2] for r in rows) == ev.num_rows

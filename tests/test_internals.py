@@ -18,9 +18,9 @@ def test_exact_ranks_matches_global_sort(spark):
         li = load(spark, sf, "lineitem").select(_price().alias("price"))
         n = li.count()
         ks = sorted({1, 2, (n + 19) // 20, n // 2, (19 * n + 19) // 20, n})
-        got = _exact_ranks(li, "price", ks, n)
+        n_got, got = _exact_ranks(li, [], "price", lambda _, m: ks)[()]
         want = naive_rank_values(li, "price", ks)
-        assert got == want, f"{sf}: {got} != {want}"
+        assert n_got == n and got == want, f"{sf}: {got} != {want}"
 
 
 def test_price_cutoffs_match_naive(spark):
@@ -50,8 +50,8 @@ def test_exact_ranks_constant_column(spark):
     """All-equal values put every rank in one bin; the dense-bin path
     (recursion bottoms out, then collects) must still be exact."""
     df = spark.range(40000).selectExpr("CAST(7.5 AS DOUBLE) AS v")
-    got = _exact_ranks(df, "v", [1, 20000, 40000], 40000)
-    assert got == {1: 7.5, 20000: 7.5, 40000: 7.5}
+    got = _exact_ranks(df, [], "v", lambda _, n: [1, 20000, 40000])
+    assert got == {(): (40000, {1: 7.5, 20000: 7.5, 40000: 7.5})}
 
 
 def test_exact_ranks_dense_bin_recursion(spark):
@@ -62,9 +62,9 @@ def test_exact_ranks_dense_bin_recursion(spark):
     # (> _COLLECT_LIMIT), so the finer scale must kick in
     df = spark.range(50000).selectExpr("1000.0 + id * 1e-6 AS v")
     ks = [1, 25000, 50000]
-    got = _exact_ranks(df, "v", ks, 50000)
+    got = _exact_ranks(df, [], "v", lambda _, n: ks)
     want = {1: 1000.0, 25000: 1000.0 + 24999 * 1e-6, 50000: 1000.0 + 49999 * 1e-6}
-    assert got == want
+    assert got == {(): (50000, want)}
 
 
 def naive_median_counts(df, keys):
@@ -82,16 +82,16 @@ def test_grouped_median_matches_window(spark):
     """The grouped binned rank search must reproduce the per-group
     row_number median bit-for-bit, on real data and on a synthetic
     set with duplicate values and odd/even group sizes."""
-    from rental_engine.queries import (_Ctx, _binned_cleaned, _dims,
+    from rental_engine.queries import (_Ctx, _cleaned_lineitem, _dims,
                                        _grouped_median, _log_bin)
     for sf in (SF_SMALL, SF_MED):
         ctx = _Ctx(spark, sf)
-        binned = _binned_cleaned(ctx)
-        cl = _dims(ctx, binned, {"city", "district"})
+        cleaned = _cleaned_lineitem(ctx)
+        cl = _dims(ctx, cleaned, {"city", "district"})
         for keys in (["city"], ["city", "district"]):
             need = set(keys)
             got = sorted(map(tuple, _grouped_median(
-                ctx, binned, keys,
+                ctx, cleaned, keys,
                 lambda df, small_fact=False: _dims(ctx, df, need,
                                                    small_fact)).collect()))
             want = sorted(map(tuple, naive_median_counts(cl, keys).collect()))
@@ -110,8 +110,9 @@ def test_grouped_median_matches_window(spark):
 
 
 def test_grouped_median_dense_cell_path(spark, monkeypatch):
-    """A (group, bin) cell above _GM_DENSE_CELL_ROWS must be resolved
-    by the recursive rank search and still give the window answer."""
+    """A (group, bin) cell past the pull's _COLLECT_LIMIT must be
+    resolved by the recursive rank search and still give the window
+    answer."""
     import rental_engine.queries as Q
     from rental_engine.queries import _Ctx, _grouped_median, _log_bin
     syn = (spark.range(3001)
@@ -119,13 +120,75 @@ def test_grouped_median_dense_cell_path(spark, monkeypatch):
                        "CASE WHEN id < 3000 THEN 5.0 + (id % 3) * 1e-9 "
                        "ELSE 42.0 END AS price_per_unit")
            .withColumn("b", _log_bin("price_per_unit", 0)))
-    monkeypatch.setattr(Q, "_GM_DENSE_CELL_ROWS", 1000)
+    monkeypatch.setattr(Q, "_COLLECT_LIMIT", 1000)
     got = sorted(map(tuple, _grouped_median(
         _Ctx(spark, SF_SMALL), syn, ["g"],
         lambda df, small_fact=False: df).collect()))
     want = sorted(map(tuple, naive_median_counts(syn, ["g"]).collect()))
     assert got == want
     assert got == [("dense", 3000, 5.0 + 1e-9), ("tiny", 1, 42.0)]
+
+
+def test_grouped_median_batches_dense_cells(spark, monkeypatch):
+    """Simultaneously dense cells are refined together: the count and
+    pull jobs grow with the refinement levels, never with the number of
+    dense cells, and the medians stay the window answer."""
+    import rental_engine.queries as Q
+    sc = spark.sparkContext
+    ctx = Q._Ctx(spark, SF_SMALL)
+    real, levels = Q._exact_ranks, []
+
+    def counted(*args, **kwargs):
+        levels.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(Q, "_exact_ranks", counted)
+
+    def run(n_dense):
+        # n_dense groups of 2000 rows that share one depth-0 log bin
+        # (all within 2.5e-4 in ln), shifted so their medians differ,
+        # plus a one-row group
+        syn = spark.range(2000 * n_dense + 1).selectExpr(
+            f"CASE WHEN id < {2000 * n_dense} THEN concat('g', id % {n_dense})"
+            " ELSE 'tiny' END AS g",
+            f"CASE WHEN id < {2000 * n_dense} THEN 5.0 * (1 + "
+            f"(id div {n_dense} + 100 * (id % {n_dense})) * 1e-7) "
+            "ELSE 42.0 END AS price_per_unit")
+        group = f"batched-{n_dense}-{Q._COLLECT_LIMIT}"
+        levels.clear()
+        sc.setJobGroup(group, group)
+        try:
+            got = sorted(map(tuple, Q._grouped_median(
+                ctx, syn, ["g"], lambda df, small_fact=False: df).collect()))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        want = sorted(map(tuple, naive_median_counts(syn, ["g"]).collect()))
+        assert got == want, n_dense
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(levels), len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one_level = run(3)
+    monkeypatch.setattr(Q, "_COLLECT_LIMIT", 500)  # every 2000-row cell is dense
+    three, six = run(3), run(6)
+    assert one_level[0] == 1 and three[0] == six[0] == 2
+    assert three[1] == six[1] > one_level[1]
+
+
+def test_grouped_median_max_depth_window(spark, monkeypatch):
+    """Grouped cells still dense after _MAX_DEPTH refinements (equal
+    values) are ranked by the per-cell window and give the window
+    answer."""
+    import rental_engine.queries as Q
+    syn = spark.range(4000).selectExpr(
+        "CASE WHEN id % 2 = 0 THEN 'even' ELSE 'odd' END AS g",
+        "CAST(CASE WHEN id < 3000 THEN 2.5 + id % 2 ELSE 7.0 + id END AS DOUBLE)"
+        " AS price_per_unit")
+    monkeypatch.setattr(Q, "_COLLECT_LIMIT", 1000)
+    got = sorted(map(tuple, Q._grouped_median(
+        Q._Ctx(spark, SF_SMALL), syn, ["g"],
+        lambda df, small_fact=False: df).collect()))
+    want = sorted(map(tuple, naive_median_counts(syn, ["g"]).collect()))
+    assert got == want and got == [("even", 2000, 2.5), ("odd", 2000, 3.5)]
 
 
 def test_region_preagg_matches_direct(spark):
@@ -176,42 +239,21 @@ def test_knn_query_guard_and_chunking(spark, monkeypatch):
         Q.embed_knn(spark, SF_SMALL)
 
 
-def test_hourly_two_level_distinct_null_semantics(spark):
-    """The two-level exact distinct must exclude NULL user_id like
-    count(DISTINCT user_id) does (the current testdata has no NULLs,
-    so pin it synthetically)."""
-    from pyspark.sql import types as T
-    rows = [(1, "2031-01-01 10:05:00", 7, "view", 1.0, ""),
-            (2, "2031-01-01 10:15:00", None, "view", 2.0, ""),
-            (3, "2031-01-01 10:25:00", 7, "view", 3.0, ""),
-            (4, "2031-01-01 10:35:00", 8, "view", 4.0, "")]
-    schema = T.StructType([
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts_s", T.StringType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType())])
-    ev = (spark.createDataFrame(rows, schema)
-          .selectExpr("CAST(ts_s AS TIMESTAMP_NTZ) AS ts",
-                      "event_type", "user_id", "value"))
-    pre = (ev.select(F.date_trunc("hour", "ts").alias("hour"), "event_type",
-                     "user_id", F.floor(F.col("value") * F.lit(1000000.0)).alias("qv"))
-             .groupBy("hour", "event_type", "user_id")
-             .agg(F.count(F.lit(1)).alias("c"), F.sum("qv").alias("s")))
-    got = (pre.groupBy("hour", "event_type")
-              .agg(F.sum("c").alias("n_events"),
-                   F.count("user_id").alias("n_users")).collect())
-    want = (ev.groupBy(F.date_trunc("hour", "ts").alias("hour"), "event_type")
-              .agg(F.count(F.lit(1)).alias("n_events"),
-                   F.countDistinct("user_id").alias("n_users")).collect())
-    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
-    assert got[0]["n_events"] == 4 and got[0]["n_users"] == 2
+def test_events_hourly_plan_has_no_expand(spark):
+    """A single count(DISTINCT user_id) beside plain aggregates must
+    plan as a two-level aggregation, never an Expand that copies every
+    input row before the exchange."""
+    from rental_engine.queries import events_hourly
+    df = events_hourly(spark, SF_SMALL)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "HashAggregate" in plan and "Expand" not in plan, plan
 
 
 def test_qsum_overflow_headroom(spark):
-    """_qsum documents a sum(|x|)*1e6 < 2^63 validity limit (non-ANSI
-    BIGINT sums wrap silently past it).  Prove the headroom at the
+    """_qsum documents a sum(|x|)*1e6 < 2^63 validity limit (past it
+    a BIGINT sum raises ARITHMETIC_OVERFLOW under ANSI mode, the bench
+    session's setting, and wraps without it).  Prove the headroom at the
     LARGEST bench scale factor for every quantized accumulation the
     queries perform, including the regression's qx*qy products."""
     li = load(spark, "/root/testdata/sf0.1", "lineitem")

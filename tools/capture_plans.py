@@ -11,8 +11,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
+from bench import build_session
 from rental_engine import QUERIES
 
 
@@ -21,18 +20,8 @@ def main() -> None:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     round_dir = sys.argv[3] if len(sys.argv) > 3 else "r16"
     only = set(sys.argv[4].split(",")) if len(sys.argv) > 4 else None
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if round_dir == "r15" and tag == "before":
-        spark = (
-            SparkSession.builder.master(f"local[{cpus}]")
-            .appName("plan-capture")
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.ui.enabled", "false")
-            .getOrCreate()
-        )
-    else:  # capture under the same session config the bench runs with
-        from bench import build_session
-        spark = build_session(cpus)
+    # capture under the same session config the bench runs with
+    spark = build_session(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                            "plans", round_dir)
