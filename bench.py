@@ -16,7 +16,12 @@ import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _ROOT)
+# the mapInArrow kernels are pickled by module reference, so the Python
+# workers (started with this environment) must import rental_engine too
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (_ROOT, os.environ.get("PYTHONPATH")) if p)
 
 from pyspark.sql import SparkSession
 

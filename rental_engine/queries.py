@@ -110,23 +110,20 @@ class _Ctx:
         return self._tables[name]
 
 
-def _table_bytes(sf_dir: str, name: str) -> int:
-    """On-disk size of a table (file or directory of parts) — a cheap,
-    scale-adaptive input for size-gated join hints (guide §3.1)."""
-    import os
-    p = f"{sf_dir}/{name}.parquet"
-    if os.path.isdir(p):
-        return sum(os.path.getsize(os.path.join(root, f))
-                   for root, _, files in os.walk(p) for f in files)
-    return os.path.getsize(p)
+def _table_bytes(ctx: _Ctx, name: str) -> int:
+    """Table size from Spark's own file listing (the one input of every
+    size gate): reads no data and works on any path Spark can read."""
+    return int(ctx.load(name)._jdf.queryExecution().analyzed()
+               .stats().sizeInBytes())
 
 
 QSCALE = 1_000_000  # 1e-6 quantum for floating sums/averages
 
 # broadcast the pre-joined dimension mapping only while its inputs'
-# on-disk bytes stay below this (comfortably inside executor memory
-# even at ~4x in-memory expansion); beyond it the planner picks a
-# shuffled join of the fact-sized sides
+# listed bytes (_table_bytes) stay below this — comfortably inside
+# executor memory even at ~4x in-memory expansion.  Past it the
+# planner picks a shuffled join of the fact-sized sides and the region
+# rollups aggregate before that join (_broadcast_dims decides both)
 _DIM_BROADCAST_CAP = 64 << 20
 
 # broadcast the rank-search pull's fact side only while its EXACT row
@@ -208,15 +205,14 @@ def _log_bin(col: str, depth: int, scale: float = _BIN_SCALE) -> Column:
             .cast("long")
 
 
-# Grouped-median bin granularity, derived from input size (scale-
-# adaptive, guide §2.2 spirit): bin count trades the metadata volume
-# (groups x populated bins — the LOCAL cost: measured 235k metadata
-# rows for district_stats at 512 bins/e-fold, and coarsening to 64
-# cut the query 3.5 s -> 2.8 s with identical results) against the
-# per-(group,bin) density that bounds the pull pass and its one-task
-# bin sorts (the AT-SCALE cost), so large inputs use the fine scale.
-_GM_BIN_SCALE_SMALL = 64.0
-_GM_FINE_BIN_BYTES = 1 << 30
+# Grouped-median bins are coarser than _BIN_SCALE: the count collect
+# brings every (group, bin) row to the driver (235k for district_stats
+# at 512 bins/e-fold; 64 cut it 3.5 s -> 2.8 s, identical results).
+# One scale at any size: the pull is bounded by _COLLECT_LIMIT and
+# dense cells refine together, one aggregation per level, so coarse
+# bins cost at most one more level where _BIN_SCALE would send 8x
+# more count rows to the driver.
+_GM_BIN_SCALE = 64.0
 
 
 def _exact_ranks(df: DataFrame, keys: list[str], col: str, ranks,
@@ -354,6 +350,15 @@ def _cleaned_lineitem(ctx: _Ctx) -> DataFrame:
               .withColumn("price_per_unit", pr / F.col("l_quantity")))
 
 
+def _broadcast_dims(ctx: _Ctx, need: set[str]) -> bool:
+    """Whether the dimension mapping for ``need`` (orders, plus customer
+    for a customer-side column) fits under _DIM_BROADCAST_CAP."""
+    size = _table_bytes(ctx, "orders")
+    if need & {"district", "city", "region"}:
+        size += _table_bytes(ctx, "customer")
+    return size <= _DIM_BROADCAST_CAP
+
+
 def _dims(ctx: _Ctx, cleaned: DataFrame,
           need: set[str], small_fact: bool = False) -> DataFrame:
     """Attach only the requested dimension columns.
@@ -384,18 +389,15 @@ def _dims(ctx: _Ctx, cleaned: DataFrame,
                      *[renames[alias].alias(alias) for alias in sorted(need)])
     # Catalyst's post-join size estimate for `dim` explodes, which made
     # the planner broadcast the FACT side instead; gate a broadcast
-    # hint on the real input bytes (scale-adaptive: at real scale
+    # hint on the inputs' listed bytes (scale-adaptive: at real scale
     # orders/customer exceed the cap and the planner chooses a
     # shuffled join of the two fact-sized sides).  When the caller
     # KNOWS the fact side is tiny (e.g. the rank-search pull, whose
     # exact row count comes from the bin counts), broadcast that side
     # instead and skip the dim hash-table build.
-    dim_bytes = _table_bytes(ctx.sf_dir, "orders")
-    if need & {"district", "city", "region"}:
-        dim_bytes += _table_bytes(ctx.sf_dir, "customer")
     if small_fact:
         cleaned = F.broadcast(cleaned)
-    elif dim_bytes <= _DIM_BROADCAST_CAP:
+    elif _broadcast_dims(ctx, need):
         dim = F.broadcast(dim)
     return cleaned.join(dim, cleaned.l_orderkey == dim.o_orderkey) \
                   .drop("o_orderkey")
@@ -424,9 +426,8 @@ def _grouped_median(ctx: _Ctx, df: DataFrame, keys: list[str],
     (n + 1) DIV 2) from ``_exact_ranks``, as a small local DataFrame.
     price_per_unit > 0 by construction (price >= lo > 0, l_quantity > 0).
     """
-    fine = _table_bytes(ctx.sf_dir, "lineitem") >= _GM_FINE_BIN_BYTES
     got = _exact_ranks(df, keys, "price_per_unit", lambda _, n: [(n + 1) // 2],
-                       attach, _BIN_SCALE if fine else _GM_BIN_SCALE_SMALL)
+                       attach, _GM_BIN_SCALE)
     schema = (attach(df).select(*keys).schema
               .add("n_listings", "long").add("median_ppu", "double"))
     return ctx.spark.createDataFrame(
@@ -493,7 +494,7 @@ def advertiser_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _region_rollup(spark: SparkSession, sf_dir: str, value_col: str,
-                   out_name: str, pre_aggregate: bool | None = None) -> DataFrame:
+                   out_name: str) -> DataFrame:
     """Per-region (count, floor-quantized mean of ``value_col``).
 
     Two exactly-equivalent shapes (pinned equal by
@@ -501,28 +502,23 @@ def _region_rollup(spark: SparkSession, sf_dir: str, value_col: str,
 
     * direct (small inputs): join the dimension mapping, then group —
       the dim side broadcasts, so the fact rows never shuffle;
-    * pre-aggregated (scale-up; chosen when orders+customer exceed the
-      broadcast cap, so the dim join would shuffle the fact table):
-      aggregate lineitem by l_orderkey FIRST — count and the exact
-      integer partial sums — so only one row per order enters the
-      shuffled join (guide §2.3 "aggregate before you shuffle"); the
-      integer partials re-sum to the identical BIGINT total.
+    * pre-aggregated (scale-up; chosen when _broadcast_dims says the
+      dim join would shuffle the fact table): aggregate lineitem by
+      l_orderkey FIRST — count and the exact integer partial sums — so
+      only one row per order enters the shuffled join (guide §2.3
+      "aggregate before you shuffle"); the integer partials re-sum to
+      the identical BIGINT total.
     """
     ctx = _Ctx(spark, sf_dir)
     cl = _cleaned_lineitem(ctx)
-    if pre_aggregate is None:
-        pre_aggregate = (_table_bytes(sf_dir, "orders")
-                         + _table_bytes(sf_dir, "customer")) > _DIM_BROADCAST_CAP
-    if not pre_aggregate:
+    if _broadcast_dims(ctx, {"region"}):
         full = _dims(ctx, cl, {"region"})
         n = F.count(F.lit(1))
         return (full.groupBy("region")
                     .agg(n.alias("n_listings"),
                          _qavg(value_col, n).alias(out_name)))
     pre = (cl.groupBy("l_orderkey")
-             .agg(F.count(F.lit(1)).alias("c"),
-                  F.sum(F.floor(F.col(value_col) * F.lit(float(QSCALE))))
-                   .alias("s")))
+             .agg(F.count(F.lit(1)).alias("c"), _qsum(value_col).alias("s")))
     j = _dims(ctx, pre, {"region"})
     n = F.sum("c")
     return (j.groupBy("region")
@@ -797,7 +793,7 @@ def multimodal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The broadcast side holds ~20 bytes/row where the input holds a
     # 64-float vector (~270 bytes/row), so the input-bytes gate is
     # scaled by a conservative 8x reduction factor.
-    if _table_bytes(sf_dir, "embeddings") <= 8 * _DIM_BROADCAST_CAP:
+    if _table_bytes(ctx, "embeddings") <= 8 * _DIM_BROADCAST_CAP:
         e = F.broadcast(e)
     j = d.join(e, d.doc_id == e.vec_id)
     n = F.count(F.lit(1))

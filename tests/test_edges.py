@@ -1,5 +1,6 @@
-"""Oracle parity on edge inputs: sf0.001 copies with one table replaced,
-written with pyarrow under the test's tmp_path."""
+"""Oracle parity on edge inputs: sf0.001 read through a file:// URI, and
+sf0.001 copies with one table replaced, written with pyarrow under the
+test's tmp_path."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from rental_engine import QUERIES
 from rental_engine.queries import TABLES
 from tests.conftest import SF_SMALL
 from tests.test_oracle import canon_rows, run_both
@@ -30,8 +32,8 @@ def edge_dir(path, name: str, table: pa.Table) -> str:
     return str(path)
 
 
-def assert_parity(spark, name: str, sf_dir: str):
-    scols, srows, dcols, drows = run_both(spark, name, sf_dir)
+def assert_parity(spark, name: str, sf_dir: str, spark_dir: str | None = None):
+    scols, srows, dcols, drows = run_both(spark, name, sf_dir, spark_dir)
     assert scols == dcols, f"{name}: column mismatch {scols} vs {dcols}"
     assert canon_rows(srows) == canon_rows(drows), f"{name}: {srows[:3]} vs {drows[:3]}"
     return srows
@@ -62,3 +64,10 @@ def test_events_hourly_null_user_matches_oracle(spark, tmp_path):
     ev = ev.set_column(i, ev.schema.field(i), pa.array(users, pa.int64()))
     rows = assert_parity(spark, "events_hourly", edge_dir(tmp_path, "events", ev))
     assert rows and sum(r[2] for r in rows) == ev.num_rows
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_file_uri_matches_oracle(spark, name):
+    """A storage URI that the local filesystem cannot stat as given:
+    Spark reads file://<sf0.001>, the oracle reads the plain path."""
+    assert_parity(spark, name, SF_SMALL, "file://" + SF_SMALL)

@@ -191,17 +191,28 @@ def test_grouped_median_max_depth_window(spark, monkeypatch):
     assert got == want and got == [("even", 2000, 2.5), ("odd", 2000, 3.5)]
 
 
-def test_region_preagg_matches_direct(spark):
+def test_region_preagg_matches_direct(spark, monkeypatch):
     """The scale-up shape (pre-aggregate lineitem by l_orderkey before
-    the shuffled dim join) must be bit-identical to the direct shape."""
-    from rental_engine.queries import _region_rollup
+    the shuffled dim join), forced by a zero broadcast cap, must be
+    bit-identical to the direct shape; only the forced plan aggregates
+    by l_orderkey below the dimension join."""
+    import rental_engine.queries as Q
+
+    def rollup(sf, col, out):
+        df = Q._region_rollup(spark, sf, col, out)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        below_join = plan[plan.index("Join Inner, (l_orderkey#"):]
+        return (sorted(map(tuple, df.collect())),
+                "Aggregate [l_orderkey#" in below_join)
+
     for sf in (SF_SMALL, SF_MED):
         for col, out in (("price", "avg_price"), ("price_per_unit", "avg_ppu")):
-            direct = sorted(map(tuple, _region_rollup(
-                spark, sf, col, out, pre_aggregate=False).collect()))
-            pre = sorted(map(tuple, _region_rollup(
-                spark, sf, col, out, pre_aggregate=True).collect()))
+            direct, direct_preagg = rollup(sf, col, out)
+            with monkeypatch.context() as m:
+                m.setattr(Q, "_DIM_BROADCAST_CAP", 0)
+                pre, forced_preagg = rollup(sf, col, out)
             assert direct == pre, f"{sf} {col}"
+            assert forced_preagg and not direct_preagg, f"{sf} {col}"
 
 
 def test_dedup_hash_groups_match_signature_groups(spark):

@@ -42,8 +42,10 @@ def canon_rows(rows):
     return sorted([tuple(canon(v) for v in r) for r in rows], key=str)
 
 
-def run_both(spark, name: str, sf_dir: str):
-    sdf = QUERIES[name](spark, sf_dir)
+def run_both(spark, name: str, sf_dir: str, spark_dir: str | None = None):
+    """Spark's and DuckDB's (columns, rows); Spark reads ``spark_dir``
+    (the same data under another path) when given."""
+    sdf = QUERIES[name](spark, spark_dir or sf_dir)
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
     con = duck_con(sf_dir)
