@@ -1,6 +1,7 @@
 """Oracle parity on edge inputs: sf0.001 read through a file:// URI, and
 sf0.001 copies with one table replaced, written with pyarrow under the
-test's tmp_path."""
+test's tmp_path: an empty lineitem, a single-row lineitem, every price
+equal, NULL user_id."""
 
 from __future__ import annotations
 
@@ -32,6 +33,11 @@ def edge_dir(path, name: str, table: pa.Table) -> str:
     return str(path)
 
 
+def with_column(table: pa.Table, name: str, values: pa.Array) -> pa.Table:
+    i = table.schema.get_field_index(name)
+    return table.set_column(i, table.schema.field(i), values)
+
+
 def assert_parity(spark, name: str, sf_dir: str, spark_dir: str | None = None):
     scols, srows, dcols, drows = run_both(spark, name, sf_dir, spark_dir)
     assert scols == dcols, f"{name}: column mismatch {scols} vs {dcols}"
@@ -54,14 +60,35 @@ def test_empty_lineitem_matches_oracle(spark, empty_lineitem, name):
     assert rows == ([(0, None, None)] if name == "price_area_regression" else [])
 
 
+@pytest.fixture(scope="module")
+def degenerate_lineitem(tmp_path_factory):
+    """Data dirs whose lineitem is its first row alone, or has every
+    price equal (one extended price, no discount)."""
+    li = pq.read_table(f"{SF_SMALL}/lineitem.parquet")
+    n = li.num_rows
+    equal = with_column(with_column(li, "l_extendedprice", pa.array([1000.0] * n)),
+                        "l_discount", pa.array([0.0] * n))
+    return {case: edge_dir(tmp_path_factory.mktemp(case), "lineitem", table)
+            for case, table in (("single_row", li.slice(0, 1)),
+                                ("equal_prices", equal))}
+
+
+@pytest.mark.parametrize("name", LINEITEM_QUERIES)
+@pytest.mark.parametrize("case", ["single_row", "equal_prices"])
+def test_degenerate_lineitem_matches_oracle(spark, degenerate_lineitem, case, name):
+    """One price makes both cutoffs that price: every row is in the band,
+    the cutoff search sees one bin, the histogram has zero width and a
+    single row leaves the regression without a slope."""
+    assert assert_parity(spark, name, degenerate_lineitem[case])
+
+
 def test_events_hourly_null_user_matches_oracle(spark, tmp_path):
     """count(DISTINCT user_id) must skip NULL users as the oracle does
     (the testdata has none, so a third of them are blanked here)."""
     ev = pq.read_table(f"{SF_SMALL}/events.parquet")
     users = [None if i % 3 == 0 else u
              for i, u in enumerate(ev.column("user_id").to_pylist())]
-    i = ev.schema.get_field_index("user_id")
-    ev = ev.set_column(i, ev.schema.field(i), pa.array(users, pa.int64()))
+    ev = with_column(ev, "user_id", pa.array(users, pa.int64()))
     rows = assert_parity(spark, "events_hourly", edge_dir(tmp_path, "events", ev))
     assert rows and sum(r[2] for r in rows) == ev.num_rows
 

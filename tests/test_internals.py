@@ -90,10 +90,9 @@ def test_grouped_median_matches_window(spark):
         cl = _dims(ctx, cleaned, {"city", "district"})
         for keys in (["city"], ["city", "district"]):
             need = set(keys)
-            got = sorted(map(tuple, _grouped_median(
-                ctx, cleaned, keys,
-                lambda df, small_fact=False: _dims(ctx, df, need,
-                                                   small_fact)).collect()))
+            got = sorted(_grouped_median(
+                cleaned, keys,
+                lambda df, small_fact=False: _dims(ctx, df, need, small_fact)))
             want = sorted(map(tuple, naive_median_counts(cl, keys).collect()))
             assert got == want, f"{sf} {keys}"
     # synthetic: duplicates, ties at the median, even/odd sizes
@@ -102,11 +101,26 @@ def test_grouped_median_matches_window(spark):
          ("b", 3.0),                                            # singleton
          ("c", 5.0), ("c", 5.0), ("c", 5.0), ("c", 9.0), ("c", 0.5)],
         ["g", "price_per_unit"]).withColumn("b", _log_bin("price_per_unit", 0))
-    got = sorted(map(tuple, _grouped_median(
-        _Ctx(spark, SF_SMALL), syn, ["g"],
-        lambda df, small_fact=False: df).collect()))
+    got = sorted(_grouped_median(syn, ["g"], lambda df, small_fact=False: df))
     want = sorted(map(tuple, naive_median_counts(syn, ["g"]).collect()))
     assert got == want and got == [("a", 4, 1.0), ("b", 1, 3.0), ("c", 5, 5.0)]
+
+
+def test_grouped_median_null_key(spark, monkeypatch):
+    """A NULL group key crosses both Arrow round trips (the count pull
+    and the broadcast target cells) and must still match its own rows
+    through the eqNullSafe join: in the pull, after a refinement and in
+    the per-cell window past _MAX_DEPTH."""
+    import rental_engine.queries as Q
+    syn = spark.createDataFrame(
+        [(None, 2.0), (None, 2.0), (None, 3.0), ("a", 1.0), ("a", 4.0),
+         (None, 0.5), ("a", 4.0)], "g string, price_per_unit double")
+    want = {r[0]: tuple(r[1:]) for r in naive_median_counts(syn, ["g"]).collect()}
+    assert want == {None: (4, 2.0), "a": (3, 4.0)}
+    for limit in (Q._COLLECT_LIMIT, 1):  # 1: every cell is dense
+        monkeypatch.setattr(Q, "_COLLECT_LIMIT", limit)
+        got = Q._grouped_median(syn, ["g"], lambda df, small_fact=False: df)
+        assert {r[0]: tuple(r[1:]) for r in got} == want, limit
 
 
 def test_grouped_median_dense_cell_path(spark, monkeypatch):
@@ -114,16 +128,14 @@ def test_grouped_median_dense_cell_path(spark, monkeypatch):
     resolved by the recursive rank search and still give the window
     answer."""
     import rental_engine.queries as Q
-    from rental_engine.queries import _Ctx, _grouped_median, _log_bin
+    from rental_engine.queries import _grouped_median, _log_bin
     syn = (spark.range(3001)
            .selectExpr("CASE WHEN id < 3000 THEN 'dense' ELSE 'tiny' END AS g",
                        "CASE WHEN id < 3000 THEN 5.0 + (id % 3) * 1e-9 "
                        "ELSE 42.0 END AS price_per_unit")
            .withColumn("b", _log_bin("price_per_unit", 0)))
     monkeypatch.setattr(Q, "_COLLECT_LIMIT", 1000)
-    got = sorted(map(tuple, _grouped_median(
-        _Ctx(spark, SF_SMALL), syn, ["g"],
-        lambda df, small_fact=False: df).collect()))
+    got = sorted(_grouped_median(syn, ["g"], lambda df, small_fact=False: df))
     want = sorted(map(tuple, naive_median_counts(syn, ["g"]).collect()))
     assert got == want
     assert got == [("dense", 3000, 5.0 + 1e-9), ("tiny", 1, 42.0)]
@@ -135,7 +147,6 @@ def test_grouped_median_batches_dense_cells(spark, monkeypatch):
     dense cells, and the medians stay the window answer."""
     import rental_engine.queries as Q
     sc = spark.sparkContext
-    ctx = Q._Ctx(spark, SF_SMALL)
     real, levels = Q._exact_ranks, []
 
     def counted(*args, **kwargs):
@@ -158,8 +169,8 @@ def test_grouped_median_batches_dense_cells(spark, monkeypatch):
         levels.clear()
         sc.setJobGroup(group, group)
         try:
-            got = sorted(map(tuple, Q._grouped_median(
-                ctx, syn, ["g"], lambda df, small_fact=False: df).collect()))
+            got = sorted(Q._grouped_median(syn, ["g"],
+                                           lambda df, small_fact=False: df))
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         want = sorted(map(tuple, naive_median_counts(syn, ["g"]).collect()))
@@ -184,11 +195,88 @@ def test_grouped_median_max_depth_window(spark, monkeypatch):
         "CAST(CASE WHEN id < 3000 THEN 2.5 + id % 2 ELSE 7.0 + id END AS DOUBLE)"
         " AS price_per_unit")
     monkeypatch.setattr(Q, "_COLLECT_LIMIT", 1000)
-    got = sorted(map(tuple, Q._grouped_median(
-        Q._Ctx(spark, SF_SMALL), syn, ["g"],
-        lambda df, small_fact=False: df).collect()))
+    got = sorted(Q._grouped_median(syn, ["g"], lambda df, small_fact=False: df))
     want = sorted(map(tuple, naive_median_counts(syn, ["g"]).collect()))
     assert got == want and got == [("even", 2000, 2.5), ("odd", 2000, 3.5)]
+
+
+def test_rank_search_jobs_are_labelled(spark, monkeypatch):
+    """Every job the rank search launches carries a ``ranks:`` job
+    description (count and pull per level, the max-depth window), and
+    the caller's own description and job group come back afterwards."""
+    import rental_engine.queries as Q
+    sc = spark.sparkContext
+    group = "rank-labels"
+    sc.setJobGroup(group, "caller")
+    try:
+        # district_stats' build: the cutoffs and the grouped median
+        Q.district_stats(spark, SF_SMALL)
+        # equal values stay dense at every level down to the window
+        monkeypatch.setattr(Q, "_COLLECT_LIMIT", 10)
+        Q._exact_ranks(spark.range(100).selectExpr("CAST(7.5 AS DOUBLE) AS v"),
+                       [], "v", lambda _, n: [1, n])
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        assert sc.getLocalProperty("spark.jobGroup.id") == group
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    labels = [store.job(j).description() for j in sc.statusTracker().getJobIdsForGroup(group)]
+    labels = [d.get() if d.isDefined() else None for d in labels]
+    assert labels and all(d and d.startswith("ranks:") for d in labels), labels
+    assert {"ranks:count:0", "ranks:pull:0", "ranks:count:3",
+            "ranks:window"} <= set(labels), set(labels)
+
+
+def test_median_queries_use_no_python_rdd(spark, monkeypatch):
+    """city_stats and district_stats build every local frame from an
+    Arrow table: no SparkSession.createDataFrame call with a Python
+    list, and no Scan ExistingRDD (which starts Python workers on every
+    execution) in any plan they run, eager pulls and final action."""
+    import rental_engine.queries as Q
+    from pyspark.sql import SparkSession
+    real_create, real_pull = SparkSession.createDataFrame, Q._pull
+    inputs, plans = [], []
+
+    def create(self, data, *args, **kwargs):
+        inputs.append(type(data))
+        return real_create(self, data, *args, **kwargs)
+
+    def pull(df, label):
+        rows = list(real_pull(df, label))
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", create)
+    monkeypatch.setattr(Q, "_pull", pull)
+    for name in ("city_stats", "district_stats"):
+        df = Q.QUERIES[name](spark, SF_SMALL)
+        assert df.count() > 0
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+    assert inputs and all(t is not list for t in inputs), inputs
+    assert not [p for p in plans if "ExistingRDD" in p]
+    assert any("LocalTableScan" in p for p in plans)
+
+
+def test_driver_top20_matches_spark_order(spark, monkeypatch):
+    """The driver-side top 20 of city_stats and district_stats keeps the
+    cities Spark's own ordering keeps (count descending, then city by
+    UTF-8 bytes) when 22 cities tie, non-ASCII names included."""
+    import rental_engine.queries as Q
+    # 20th place falls between U+FFFD and U+1F600, whose UTF-16 order
+    # (a surrogate pair sorts first) differs from their UTF-8 order
+    cities = [f"C{i}" for i in range(17)] + [
+        "Z\u00fcrich", "\u0141\u00f3d\u017a", "\U0001f600", "\ufffd", "\U0001f601"]
+    by_city = [(c, 10, 1.5) for c in reversed(cities)]
+    by_district = [(c, d, 5, 2.5) for c in reversed(cities) for d in ("a", "b")]
+    monkeypatch.setattr(Q, "_grouped_median", lambda df, keys, attach:
+                        by_district if "district" in keys else by_city)
+    ref = spark.createDataFrame(by_city, "city string, n_listings bigint, m double")
+    want = sorted(r[0] for r in ref.orderBy(F.desc("n_listings"), "city")
+                                   .limit(20).collect())
+    assert sorted(r[0] for r in Q.city_stats(spark, SF_SMALL).collect()) == want
+    assert sorted({r[0] for r in Q.district_stats(spark, SF_SMALL).collect()}) == want
 
 
 def test_region_preagg_matches_direct(spark, monkeypatch):

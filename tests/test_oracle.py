@@ -11,7 +11,7 @@ import pytest
 
 from rental_engine import ORACLE, QUERIES
 from rental_engine.queries import TABLES
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_MED, SF_SMALL
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -56,9 +56,15 @@ def run_both(spark, name: str, sf_dir: str, spark_dir: str | None = None):
     return scols, srows, dcols, drows
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_matches_oracle(spark, name):
-    scols, srows, dcols, drows = run_both(spark, name, SF_SMALL)
+# every query at sf0.001; the grouped-median queries also at sf0.01, where
+# ten times the rows share each (group, bin) cell of the rank search
+@pytest.mark.parametrize("name,sf_dir", [
+    *(pytest.param(n, SF_SMALL, id=n) for n in sorted(QUERIES)),
+    *(pytest.param(n, SF_MED, id=f"{n}-sf0.01")
+      for n in ("city_stats", "district_stats")),
+])
+def test_query_matches_oracle(spark, name, sf_dir):
+    scols, srows, dcols, drows = run_both(spark, name, sf_dir)
     assert scols == dcols, f"{name}: column mismatch {scols} vs {dcols}"
     assert len(srows) == len(drows), f"{name}: row count {len(srows)} vs {len(drows)}"
     assert len(srows) > 0, f"{name}: empty result"
