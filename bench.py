@@ -45,16 +45,9 @@ def build_session(cpus: str) -> SparkSession:
         # default 240m code cache thrashes (sweeper/deopt storms showed
         # up as random multi-second stalls on otherwise-idle CPUs)
         .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=1g")
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.partitions", str(n_shuffle))
-        .config("spark.sql.adaptive.enabled", "true")                    # default, stated
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")  # default, stated
         .config("spark.sql.join.preferSortMergeJoin", "false")  # allow shuffled-hash (§3.1)
-        # Spark 4's ICU-backed lower() pays a one-time ~10-60s static
-        # init (CollationAwareUTF8String.<clinit> builds a full
-        # code-point title-case map) that every task blocks on; the
-        # JVM case-mapping path is byte-identical for this ASCII corpus
-        .config("spark.sql.icu.caseMappings.enabled", "false")
         # the [p05,p95] band filter is a derived-expression predicate
         # feeding up to 4 joins; constraint propagation spends seconds
         # of single-threaded optimizer CPU inferring constraints from
@@ -73,15 +66,10 @@ def main() -> None:
     spark = build_session(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
-    # tiny untimed warmup so one-time JVM costs (codegen, string/ICU
-    # class init) are not charged to whichever query happens to run
+    # tiny untimed warmup so one-time JVM costs (codegen, parquet
+    # reader init) are not charged to whichever query happens to run
     # first (recomputed from parquet; no query result is reused)
-    from pyspark.sql import functions as F
     spark.read.parquet(f"{sf_dir}/nation.parquet").count()
-    (spark.range(8)
-          .select(F.lower(F.concat(F.lit("Warm"), F.col("id").cast("string"))).alias("w"),
-                  F.array_sort(F.split(F.lit("b a"), " ")).alias("t"))
-          .write.format("noop").mode("overwrite").save())
 
     def _warm_arrow(it):  # spawn the Python workers + their imports once, untimed
         import numpy, pyarrow  # noqa: F401

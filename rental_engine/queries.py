@@ -48,6 +48,11 @@ OPTIMIZATION_r16.md):
     pick their top 20 at the driver from the ~125 median rows.  At sf0.1
     on 4 cores the warmed city_stats + district_stats pass fell 6.2 ->
     4.5 s and the Python processes' peak RSS 510 -> 188 MB.
+
+Broadcast policy: the planner picks every join strategy (nation,
+region, the rank search's target cells, price_histogram's 1-row stats,
+multimodal_stats) except where its size estimate is known wrong, the
+two hints in _dims; tests/test_plan_shapes.py pins both halves.
 """
 
 from __future__ import annotations
@@ -156,11 +161,11 @@ def _local(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFr
 
 QSCALE = 1_000_000  # 1e-6 quantum for floating sums/averages
 
-# broadcast the pre-joined dimension mapping only while its inputs'
-# listed bytes (_table_bytes) stay below this — comfortably inside
-# executor memory even at ~4x in-memory expansion.  Past it the
-# planner picks a shuffled join of the fact-sized sides and the region
-# rollups aggregate before that join (_broadcast_dims decides both)
+# hint a broadcast of the pre-joined dimension mapping only while its
+# inputs' listed bytes (_table_bytes) stay below this — comfortably
+# inside executor memory even at ~4x in-memory expansion.  Past it the
+# planner chooses the join and the region rollups aggregate before it
+# (_broadcast_dims decides both)
 _DIM_BROADCAST_CAP = 64 << 20
 
 # broadcast the rank-search pull's fact side only while its EXACT row
@@ -317,7 +322,7 @@ def _exact_ranks(df: DataFrame, keys: list[str], col: str, ranks,
             .select(*keys, b.alias("__bin"), F.col(col).alias("__v"))
         if not keys:  # the bin filter alone selects the cells
             return sub
-        tgt = F.broadcast(_local(df.sparkSession, cells, sub.drop("__v").schema))
+        tgt = _local(df.sparkSession, cells, sub.drop("__v").schema)
         return sub.join(tgt, [sub[k].eqNullSafe(tgt[k]) for k in keys + ["__bin"]]) \
                   .select(*[sub[c] for c in sub.columns])
 
@@ -405,9 +410,10 @@ def _dims(ctx: _Ctx, cleaned: DataFrame,
     fact table joins it once, instead of probing/shuffling the fact
     rows through 2-4 successive joins (guide §8: move the heavy rows
     once; the round-15 shape shuffled/probed lineitem per dimension).
-    nation/region are fixed-size (25/5 rows) => explicit broadcast;
-    orders/customer strategy is left to the planner (broadcast at
-    bench scale, SMJ/shuffled-hash at real scale)."""
+    The planner broadcasts nation/region (25/5 rows) unhinted; the fact
+    join is hinted, on the fact side when the caller knows it is small,
+    else on the mapping while _broadcast_dims allows.  Past the cap the
+    planner chooses (a shuffled join at real scale)."""
     renames = {"city": F.col("n_name"), "region": F.col("r_name"),
                "district": F.col("c_mktsegment"), "adv_type": F.col("o_orderpriority")}
     dim = ctx.load("orders").select("o_orderkey", "o_custkey",
@@ -418,23 +424,17 @@ def _dims(ctx: _Ctx, cleaned: DataFrame,
         dim = dim.join(c, dim.o_custkey == c.c_custkey)
     if need & {"city", "region"}:
         n = ctx.load("nation")
-        dim = dim.join(F.broadcast(n), dim.c_nationkey == n.n_nationkey)
+        dim = dim.join(n, dim.c_nationkey == n.n_nationkey)
     if need & {"region"}:
         r = ctx.load("region")
-        dim = dim.join(F.broadcast(r), dim.n_regionkey == r.r_regionkey)
+        dim = dim.join(r, dim.n_regionkey == r.r_regionkey)
     dim = dim.select("o_orderkey",
                      *[renames[alias].alias(alias) for alias in sorted(need)])
-    # Catalyst's post-join size estimate for `dim` explodes, which made
-    # the planner broadcast the FACT side instead; gate a broadcast
-    # hint on the inputs' listed bytes (scale-adaptive: at real scale
-    # orders/customer exceed the cap and the planner chooses a
-    # shuffled join of the two fact-sized sides).  When the caller
-    # KNOWS the fact side is tiny (e.g. the rank-search pull, whose
-    # exact row count comes from the bin counts), broadcast that side
-    # instead and skip the dim hash-table build.
     if small_fact:
+        # an exact, small row count; unhinted, ~0.2 s more per median query
         cleaned = F.broadcast(cleaned)
     elif _broadcast_dims(ctx, need):
+        # estimated as its inputs' product, the mapping loses to lineitem
         dim = F.broadcast(dim)
     return cleaned.join(dim, cleaned.l_orderkey == dim.o_orderkey) \
                   .drop("o_orderkey")
@@ -624,7 +624,7 @@ def price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     bin_ = F.least(F.floor(F.try_divide(F.col("price") - F.col("mn"), width)),
                    F.lit(39)) \
             .cast("int").alias("bin")
-    return (cl.crossJoin(F.broadcast(stats))
+    return (cl.crossJoin(stats)
               .select(bin_, "mn", "mx")
               .groupBy("bin", "mn", "mx")
               .agg(F.count(F.lit(1)).alias("n_listings"))
@@ -756,19 +756,18 @@ def embed_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to the driver even if the query side turned out to be huge; the
     # length check turns "too many queries" into a loud error instead
     # of a driver OOM (guide §5)
-    q_rows = (ctx.load("embeddings")
-              .where(F.col("vec_id") % KNN_QUERY_MOD == 0)
-              .select("vec_id", "embedding")
-              .limit(KNN_MAX_QUERIES + 1).collect())
+    q_rows = list(_pull(ctx.load("embeddings")
+                        .where(F.col("vec_id") % KNN_QUERY_MOD == 0)
+                        .select("vec_id", "embedding")
+                        .limit(KNN_MAX_QUERIES + 1), "knn:queries"))
     if len(q_rows) > KNN_MAX_QUERIES:
         raise ValueError(
             f"embed_knn: query side exceeds {KNN_MAX_QUERIES} vectors; "
             "the closure-broadcast all-pairs formulation does not scale "
             "past that — use an ANN index instead")
-    q_rows.sort(key=lambda r: r["vec_id"])
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r["embedding"] for r in q_rows], dtype=np.float32) \
-              .astype(np.float64)
+    q_rows.sort(key=lambda r: r[0])
+    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
+    q_mat = np.array([r[1] for r in q_rows], dtype=np.float32).astype(np.float64)
     q_rt = np.sqrt(_fold_dot(q_mat, q_mat))  # sqrt of the exact fold
 
     def pair_cosines(it):
@@ -811,8 +810,9 @@ def embed_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join documents with their embeddings (doc_id = vec_id) and report
     per (lang, label): doc count, char totals, mean embedding norm.
-    Only the needed columns are scanned; the embedding side (norms
-    already reduced to one double) is broadcast."""
+    Only the needed columns are scanned, and the embeddings are reduced
+    to one norm per row before the join; the planner picks its strategy
+    (at bench scale it broadcasts the documents)."""
     def norm_batches(it):
         import numpy as np
         import pyarrow as pa
@@ -829,15 +829,6 @@ def multimodal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ctx.load("documents").select("doc_id", "lang", "n_chars")
     e = (ctx.load("embeddings").select("vec_id", "label", "embedding")
          .mapInArrow(norm_batches, schema="vec_id bigint, label int, norm double"))
-    # embeddings is fact-sized: broadcast its reduced (vec_id, label,
-    # norm) rows only while the real input bytes stay small (the
-    # round-15 unconditional hint was a guaranteed OOM at scale —
-    # guide §3.1); past the cap the planner shuffles both sides.
-    # The broadcast side holds ~20 bytes/row where the input holds a
-    # 64-float vector (~270 bytes/row), so the input-bytes gate is
-    # scaled by a conservative 8x reduction factor.
-    if _table_bytes(ctx, "embeddings") <= 8 * _DIM_BROADCAST_CAP:
-        e = F.broadcast(e)
     j = d.join(e, d.doc_id == e.vec_id)
     n = F.count(F.lit(1))
     return (j.groupBy("lang", "label")

@@ -1,10 +1,12 @@
 """Focused tests for optimization internals (round 15)."""
 
+import re
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from rental_engine.queries import _exact_ranks, _price, _price_cutoffs, load
-from tests.conftest import SF_MED, SF_SMALL
+from tests.conftest import SF_MED, SF_SMALL, physical_plan
 
 
 def naive_rank_values(df, col, ks):
@@ -229,34 +231,57 @@ def test_rank_search_jobs_are_labelled(spark, monkeypatch):
             "ranks:window"} <= set(labels), set(labels)
 
 
-def test_median_queries_use_no_python_rdd(spark, monkeypatch):
+def test_median_queries_use_no_python_rdd(spark, monkeypatch, pulled_plans):
     """city_stats and district_stats build every local frame from an
     Arrow table: no SparkSession.createDataFrame call with a Python
     list, and no Scan ExistingRDD (which starts Python workers on every
-    execution) in any plan they run, eager pulls and final action."""
+    execution) in any plan they run, eager pulls and final action.  The
+    keyed value pull broadcasts its few lineitem rows (``small_fact``),
+    and no plan sorts or windows the data."""
     import rental_engine.queries as Q
     from pyspark.sql import SparkSession
-    real_create, real_pull = SparkSession.createDataFrame, Q._pull
-    inputs, plans = [], []
+    real_create = SparkSession.createDataFrame
+    inputs, plans = [], pulled_plans
 
     def create(self, data, *args, **kwargs):
         inputs.append(type(data))
         return real_create(self, data, *args, **kwargs)
 
-    def pull(df, label):
-        rows = list(real_pull(df, label))
-        plans.append(df._jdf.queryExecution().executedPlan().toString())
-        return rows
-
     monkeypatch.setattr(SparkSession, "createDataFrame", create)
-    monkeypatch.setattr(Q, "_pull", pull)
     for name in ("city_stats", "district_stats"):
         df = Q.QUERIES[name](spark, SF_SMALL)
         assert df.count() > 0
-        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        plans.append((name, physical_plan(df)))
     assert inputs and all(t is not list for t in inputs), inputs
-    assert not [p for p in plans if "ExistingRDD" in p]
-    assert any("LocalTableScan" in p for p in plans)
+    assert not [p for _, p in plans if "ExistingRDD" in p]
+    assert any("LocalTableScan" in p for _, p in plans)
+    keyed = [p for label, p in plans
+             if label.startswith("ranks:pull") and "[l_orderkey]" in p]
+    assert len(keyed) == 2, plans
+    assert all("BroadcastHashJoin [l_orderkey], [o_orderkey], Inner, BuildLeft"
+               in p for p in keyed), keyed
+    assert not [p for _, p in plans if re.search(r"\b(Sort|Window) \[", p)]
+
+
+def test_query_builds_label_every_job(spark):
+    """Every job a query launches while it is being built (its eager
+    driver pulls) carries a job description."""
+    import rental_engine.queries as Q
+    sc = spark.sparkContext
+    groups = {name: f"build:{name}" for name in Q.QUERIES}
+    try:
+        for name, fn in Q.QUERIES.items():
+            sc.setLocalProperty("spark.jobGroup.id", groups[name])
+            fn(spark, SF_SMALL)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    jobs = {name: sc.statusTracker().getJobIdsForGroup(g) for name, g in groups.items()}
+    assert jobs["city_stats"] and jobs["embed_knn"], jobs
+    unlabelled = {name: ids for name, ids in jobs.items()
+                  if not all(store.job(j).description().isDefined() for j in ids)}
+    assert not unlabelled, unlabelled
 
 
 def test_driver_top20_matches_spark_order(spark, monkeypatch):
